@@ -866,6 +866,9 @@ def _q_freshness(spark, sf_dir):
     )
 
 
+_SIDE_WRITE_LOCK = threading.Lock()
+
+
 def _oracle_side_write(df, name: str) -> None:
     """Materialize a hash side table for a DuckDB oracle replay.
 
@@ -883,10 +886,23 @@ def _oracle_side_write(df, name: str) -> None:
     the side table without needing to opt in. bench.py — which runs
     only the Spark side — sets ``SPARK_GRAFT_SKIP_ORACLE_SIDE_WRITE=1``
     so the benchmark measures the operator, not oracle plumbing.
+
+    Several entries write the same side name (``simhash_tokens``,
+    ``hll_*``), possibly at once: each commits into a private uuid
+    sibling (no shared Hadoop ``_temporary``) and publishes it by
+    rename, so the fixed path always holds one complete table.
     """
     if os.environ.get("SPARK_GRAFT_SKIP_ORACLE_SIDE_WRITE") == "1":
         return
-    df.write.mode("overwrite").parquet(_oracle_side_path(name))
+    import shutil
+    import uuid
+
+    path = _oracle_side_path(name)
+    tmp = f"{path}_{uuid.uuid4().hex}"
+    df.write.parquet(tmp)
+    with _SIDE_WRITE_LOCK:
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(tmp, path)
 
 
 def _oracle_side_path(name: str) -> str:

@@ -1576,7 +1576,7 @@ def _pca_base_cov(embeddings, id_col, vec_col):
         # coalesce(1) BEFORE the persist: a cached plan materializes at
         # the static shuffle-partition count (AQE does not re-plan it),
         # so without it every power-step matvec job runs
-        # shuffle.partitions tasks over a d²-row table — ~20 32-task
+        # shuffle-partition-count tasks over a d²-row table — ~20 32-task
         # jobs of fixed overhead per pca entry (measured r11). One
         # partition is right at any corpus size: the frame is d² rows,
         # bounded by MODEL dimension, not data.

@@ -12,6 +12,8 @@ build seconds from the wall time.
 
 Zero-cost when unused: the ledger is a plain dict append guarded by
 nothing — no locks, no env flags — and holds a handful of floats.
+Streaming drains add per-query progress counters to the same ledger
+under ``stream.*`` (:func:`etl_gcp_spark.streaming.staging.drain`).
 """
 
 from __future__ import annotations

@@ -229,35 +229,32 @@ def stream_chunk_ingest(spark, waves, root: str):
     """
     import os as _os
 
+    from etl_gcp_spark.streaming.staging import drain
+
     in_dir = _os.path.join(root, "in")
     out_dir = _os.path.join(root, "out")
-    ckpt = _os.path.join(root, "ckpt")
     spark.dataSource.register(ChunkedCsvDataSource)
     start_idx = 0
     schema = None
+
+    def sink(df, bid):
+        df.write.mode("overwrite").parquet(_os.path.join(out_dir, f"b{bid}"))
+
     for wave in waves:
         schema = schema or wave.schema
         files = write_reference_chunks(
             wave, in_dir, start_index=start_idx
         )
         start_idx += len(files)
-        sdf = (
-            spark.readStream.format("chunked_csv")
-            .schema(schema)
-            .option("path", in_dir)
-            .load()
+        drain(
+            spark,
+            lambda s: (
+                s.readStream.format("chunked_csv")
+                .schema(schema)
+                .option("path", in_dir)
+                .load()
+            ),
+            sink,
+            root=root,
         )
-
-        def sink(df, bid):
-            df.write.mode("overwrite").parquet(
-                _os.path.join(out_dir, f"b{bid}")
-            )
-
-        q = (
-            sdf.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.read.parquet(_os.path.join(out_dir, "b*"))

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_gcp_spark.metering import timed as _timed_phase
-from etl_gcp_spark.streaming.staging import staged_ready
+from etl_gcp_spark.streaming.staging import drain, parquet_files, staged_ready
 
 _metered_build = _timed_phase("build")
 
@@ -303,7 +303,6 @@ def run_streaming_entity_ingest(
         delta.repartition(n_batches).write.mode("overwrite").parquet(staged)
 
     appends = os.path.join(root, "maskkeys", "appends")
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         keys = mask_key_index(batch_df, "c_custkey", "c_name")
@@ -364,26 +363,14 @@ def run_streaming_entity_ingest(
         patch.write.mode("overwrite").parquet(
             os.path.join(root, "labels", f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the engine must replay this batch_id and the
-            # overwrites above must absorb the replay
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(RECORDS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    drain(
+        spark,
+        parquet_files(RECORDS_SCHEMA, staged),
+        ingest,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     if compact:
         entity_labels_compact(spark, root)
@@ -468,7 +455,6 @@ def run_streaming_entity_erasure(
         ).repartition(n_batches).write.mode("overwrite").parquet(staged)
 
     tomb_dir = os.path.join(root, "tombstones")
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         erased = batch_df.select("id").localCheckpoint(eager=True)
@@ -524,24 +510,13 @@ def run_streaming_entity_erasure(
         erased.write.mode("overwrite").parquet(
             os.path.join(tomb_dir, f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replay must rewrite only its own slices
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema("id long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    drain(
+        spark,
+        parquet_files("id long", staged),
+        ingest,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     return serve_entity_labels(spark, root)

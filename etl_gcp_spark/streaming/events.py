@@ -7,13 +7,17 @@ watermark, and session windows — all built-ins (``F.window``,
 ``dropDuplicatesWithinWatermark``, ``F.session_window``), no custom
 state management.
 
-Each helper runs a bounded "replay" of a parquet events directory with
-``trigger(availableNow=True)`` into a memory sink and returns the
-result as a batch DataFrame — which is also how the driver's
-correctness harness exercises the streaming path. In production the
-same plan reads a live source (Kafka/files) with a real sink; only the
-``readStream``/``writeStream`` edges change, the transformation plan
-is identical — that is the point of Structured Streaming.
+Each helper runs a bounded "replay" of a parquet events directory
+through :func:`~etl_gcp_spark.streaming.staging.drain` — into a memory
+sink (:func:`_run_to_memory`) or a ``foreachBatch`` fold — and returns
+the result as a batch DataFrame, which is also how the driver's
+correctness harness exercises the streaming path. Stateful queries
+pin 8 state partitions on a child session of their own (measured
+32 → 8: 15.0 s → 3.3 s, see :func:`_run_to_memory`), so the caller's
+session conf is never touched. In production the same plan reads a
+live source (Kafka/files) with a real sink; only the source and sink
+edges change, the transformation plan is identical — that is the
+point of Structured Streaming.
 """
 
 from __future__ import annotations
@@ -27,7 +31,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_gcp_spark.streaming.staging import (
+    child_session,
+    drain,
     mark_staged,
+    parquet_files,
     stage_ordered_ranges,
     staged_ready,
 )
@@ -51,7 +58,7 @@ def _ts_is_nanos(events_path: str) -> bool:
     return "ts" in _nanos_timestamp_cols(events_path)
 
 
-def _stream_events(spark: SparkSession, events_path: str) -> DataFrame:
+def _stream_events(session: SparkSession, events_path: str) -> DataFrame:
     """File-source stream over a single parquet file or directory.
 
     The file source requires a directory; a lone ``events.parquet``
@@ -59,7 +66,9 @@ def _stream_events(spark: SparkSession, events_path: str) -> DataFrame:
     production points at an arriving-files directory). ``ts`` stored
     as TIMESTAMP(NANOS) — which Spark's parquet reader rejects — is
     detected from the footer and read long-then-truncated to
-    microsecond timestamps, same as the batch reader.
+    microsecond timestamps, same as the batch reader. ``session`` is
+    the stream's own session chosen by :func:`drain` (a child of the
+    caller's), so the ``nanosAsLong`` reader setting lands there.
     """
     if os.path.isfile(events_path):
         staged = os.path.join(
@@ -70,58 +79,34 @@ def _stream_events(spark: SparkSession, events_path: str) -> DataFrame:
         events_path = staged
     if not _ts_is_nanos(events_path):
         return (
-            spark.readStream.schema(EVENTS_SCHEMA)
+            session.readStream.schema(EVENTS_SCHEMA)
             .format("parquet")
             .load(events_path)
         )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    session.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stream = (
-        spark.readStream.schema(EVENTS_SCHEMA_NS)
+        session.readStream.schema(EVENTS_SCHEMA_NS)
         .format("parquet")
         .load(events_path)
     )
     return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
-def _run_to_memory(
-    result: DataFrame, *, output_mode: str, state_partitions: int = 8
-) -> DataFrame:
-    """Drain an ephemeral stream to a memory sink and return the table.
+def _run_to_memory(spark: SparkSession, source, *, output_mode: str) -> DataFrame:
+    """Drain the ephemeral stream ``source(session)`` to a memory sink
+    and return the table — :func:`drain` with 8 state partitions.
 
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    query's lifetime: a streaming query creates one state store PER
-    shuffle partition, and per-store open/commit overhead dominates
-    small-to-medium stateful streams (measured on the interval join at
-    sf0.1: 32 partitions → 15.0 s, 8 → 3.3 s, same 371 rows). The
-    count is fixed at first start and checkpointed, so it must be
-    chosen per query, not inherited from the batch-tuned session; on a
-    real cluster size it to executor-core count instead.
+    A streaming query creates one state store PER shuffle partition,
+    and per-store open/commit overhead dominates small-to-medium
+    stateful streams (measured on the interval join at sf0.1: 32
+    partitions → 15.0 s, 8 → 3.3 s, same 371 rows). The count is
+    fixed at first start and checkpointed, so it must be chosen per
+    query, not inherited from the batch-tuned session; :func:`drain`
+    pins it on a child session, so the caller's conf stays as it
+    was. On a real cluster size it to executor-core count instead.
+    The returned frame belongs to that child session.
     """
-    spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    name = f"mem_{uuid.uuid4().hex}"
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    out = spark.table(name)
-    # drop the catalog entry NOW: `out` already holds the resolved
-    # memory-sink relation (same rows), but without the drop the sink's
-    # row buffer stays registered — and therefore referenced — for the
-    # SESSION lifetime, so a long run (the 311-entry bench × repeats)
-    # accumulates every streaming result ever produced as driver memory
-    # debt that later queries pay for in GC (guide §5). After the drop
-    # the buffer is released as soon as the caller lets go of `out`.
-    spark.catalog.dropTempView(name)
-    return out
+    return drain(spark, source, output_mode, state_partitions=8)
 
 
 def run_streaming_hourly_counts(
@@ -133,16 +118,21 @@ def run_streaming_hourly_counts(
     watermark are finalized and evicted — the mechanism that keeps
     state finite on an unbounded stream.
     """
-    stream = _stream_events(spark, events_path)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
+
+    def agg(session):
+        return (
+            _stream_events(session, events_path)
+            .withWatermark("ts", watermark)
+            .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                F.col("w.start").alias("window_start"), "event_type", "n_events"
+            )
+        )
+
     # complete mode: a bounded replay must also emit the windows still
     # open at end-of-stream (append would hold them in state forever).
-    return _run_to_memory(agg, output_mode="complete")
+    return _run_to_memory(spark, agg, output_mode="complete")
 
 
 def run_streaming_dedup(
@@ -155,11 +145,15 @@ def run_streaming_dedup(
     streaming analog of the reference's full-row dedup (D1) with
     bounded memory.
     """
-    stream = _stream_events(spark, events_path)
-    deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    return _run_to_memory(deduped, output_mode="append")
+
+    def deduped(session):
+        return (
+            _stream_events(session, events_path)
+            .withWatermark("ts", watermark)
+            .dropDuplicatesWithinWatermark(["event_id"])
+        )
+
+    return _run_to_memory(spark, deduped, output_mode="append")
 
 
 def run_streaming_sessions(
@@ -176,19 +170,22 @@ def run_streaming_sessions(
     possible. Batch analog (oracle-checkable lag/cumsum formulation):
     :func:`etl_gcp_spark.operators.events.sessionize`.
     """
-    stream = _stream_events(spark, events_path)
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
+
+    def sessions(session):
+        return (
+            _stream_events(session, events_path)
+            .withWatermark("ts", watermark)
+            .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                F.col("w.end").alias("session_end"),
+                "n_events",
+            )
         )
-    )
-    return _run_to_memory(sessions, output_mode="complete")
+
+    return _run_to_memory(spark, sessions, output_mode="complete")
 
 
 USER_STATS_OUTPUT = (
@@ -243,26 +240,27 @@ def run_streaming_user_stats(
             }
         )
 
-    stream = _stream_events(spark, events_path)
-    # state updates key on raw long micro-seconds; timestamps are
-    # reconstructed inside the kernel so no tz ambiguity enters state
-    raw = stream.select(
-        "user_id",
-        # unix_micros, NOT cast("long") (that truncates to seconds);
-        # kernel expects ns int64
-        (F.unix_micros(F.col("ts")) * 1000).alias("ts"),
-        "value",
-    )
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    updated = raw.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=USER_STATS_OUTPUT,
-        stateStructType=USER_STATS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    snapshots = _run_to_memory(updated, output_mode="update")
+    def updated(session):
+        # state updates key on raw long micro-seconds; timestamps are
+        # reconstructed inside the kernel so no tz ambiguity enters state
+        raw = _stream_events(session, events_path).select(
+            "user_id",
+            # unix_micros, NOT cast("long") (that truncates to seconds);
+            # kernel expects ns int64
+            (F.unix_micros(F.col("ts")) * 1000).alias("ts"),
+            "value",
+        )
+        return raw.groupBy("user_id").applyInPandasWithState(
+            update,
+            outputStructType=USER_STATS_OUTPUT,
+            stateStructType=USER_STATS_STATE,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
+    snapshots = _run_to_memory(spark, updated, output_mode="update")
     # last snapshot per user = the one with the highest event count
     from pyspark.sql import Window
 
@@ -303,37 +301,40 @@ def run_streaming_click_purchase_join(
     incompleteness of outer streaming joins rather than papering
     over it.
     """
-    clicks = (
-        _stream_events(spark, events_path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
+
+    def joined(session):
+        clicks = (
+            _stream_events(session, events_path)
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("user_id").alias("c_user"),
+                F.col("event_id").alias("click_id"),
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", watermark)
         )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        _stream_events(spark, events_path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
+        purchases = (
+            _stream_events(session, events_path)
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                "user_id",
+                F.col("event_id").alias("purchase_id"),
+                F.col("ts").alias("purchase_ts"),
+            )
+            .withWatermark("purchase_ts", watermark)
         )
-        .withWatermark("purchase_ts", watermark)
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}")
-        ),
-        how,
-    ).select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
-    return _run_to_memory(joined, output_mode="append")
+        return purchases.join(
+            clicks,
+            (F.col("user_id") == F.col("c_user"))
+            & (F.col("click_ts") <= F.col("purchase_ts"))
+            & (
+                F.col("click_ts")
+                >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}")
+            ),
+            how,
+        ).select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
+
+    return _run_to_memory(spark, joined, output_mode="append")
 
 
 def run_streaming_upsert(
@@ -385,9 +386,11 @@ def run_streaming_upsert(
         # normalize ts to microsecond TIMESTAMP at stage time so the
         # stream schema is uniform regardless of the physical unit
         if _ts_is_nanos(events_path):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            reader = child_session(
+                spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+            )
             src = (
-                spark.read.schema(EVENTS_SCHEMA_NS)
+                reader.read.schema(EVENTS_SCHEMA_NS)
                 .format("parquet")
                 .load(events_path)
                 .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -398,15 +401,7 @@ def run_streaming_upsert(
             )
         src.repartition(n_batches).write.mode("overwrite").parquet(staged)
 
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
-
     recency = lambda: [F.col("ts").desc(), F.col("event_id").desc()]  # noqa: E731
-    done_in_run = {"n": 0}
 
     def versions() -> dict[int, str]:
         try:
@@ -434,20 +429,14 @@ def run_streaming_upsert(
         merged.write.mode("overwrite").parquet(
             os.path.join(root, f"v{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink write, BEFORE the checkpoint commit
-            # — the adversarial point: the engine must replay this
-            # batch_id and the overwrite above must absorb the replay
-            raise RuntimeError("injected crash (recovery test)")
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark,
+        parquet_files(EVENTS_SCHEMA, staged),
+        merge,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q.awaitTermination()
     final = versions()
     # retention: predecessor versions exist only for crash recovery
     # (a replayed batch rereads version < batch_id). Once the stream
@@ -488,17 +477,21 @@ def run_streaming_enrich(
     """
     from pyspark.sql.functions import broadcast
 
-    stream = _stream_events(spark, events_path).withColumn(
-        "join_key", F.expr(key_expr)
-    )
-    joined = stream.join(broadcast(dim), stream["join_key"] == dim[dim.columns[0]])
-    agg = joined.groupBy(dim[dim.columns[1]]).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(28,8)")), 4)
-        .cast("double")
-        .alias("value_total"),
-    )
-    return _run_to_memory(agg, output_mode="complete")
+    def agg(session):
+        stream = _stream_events(session, events_path).withColumn(
+            "join_key", F.expr(key_expr)
+        )
+        joined = stream.join(
+            broadcast(dim), stream["join_key"] == dim[dim.columns[0]]
+        )
+        return joined.groupBy(dim[dim.columns[1]]).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(28,8)")), 4)
+            .cast("double")
+            .alias("value_total"),
+        )
+
+    return _run_to_memory(spark, agg, output_mode="complete")
 
 
 def run_streaming_minhash_dedup(
@@ -564,17 +557,9 @@ def run_streaming_minhash_dedup(
         # sequential filtered scans/writes)
         stage_ordered_ranges(docs, "doc_id", staged, n_batches)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
-
     out_dir = os.path.join(root, "kept")
     docs_dir = os.path.join(root, "index_docs")
     banded_dir = os.path.join(root, "index_banded")
-    done_in_run = {"n": 0}
 
     def _slices(parent: str, before: int) -> list[str]:
         """Index slices from batches strictly before ``before``."""
@@ -657,28 +642,19 @@ def run_streaming_minhash_dedup(
         sh_b.unpersist()
         bb.unpersist()
         batch.unpersist()
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replayed batch must rewrite its own subdirs
-            raise RuntimeError("injected crash (recovery test)")
 
     # same state-partition discipline as _run_to_memory: each
     # microbatch's LSH band join shuffles a ~corpus/n_batches slice,
     # and 32-partition task overhead dominates it (see the measured
     # cliff documented on _run_to_memory)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        spark,
+        parquet_files("doc_id long, text string", staged),
+        merge,
+        root=root,
+        state_partitions=8,
+        fail_after_batches=fail_after_batches,
+    )
     return spark.read.parquet(os.path.join(out_dir, "b*"))
 
 
@@ -731,14 +707,7 @@ def run_streaming_cms(
         # one-pass key-range staging (r10; see stage_ordered_ranges)
         stage_ordered_ranges(keys, key_col, staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(f"{key_col} long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     sketch_dir = os.path.join(root, "sketch")
-    done_in_run = {"n": 0}
 
     def fold(batch_df, batch_id):
         # per-batch subdir keyed by batch_id, overwrite mode: a batch
@@ -749,22 +718,15 @@ def run_streaming_cms(
         cms_build(batch_df, key_col, width=width).write.mode(
             "overwrite"
         ).parquet(os.path.join(sketch_dir, f"b{batch_id}"))
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        spark,
+        parquet_files(f"{key_col} long", staged),
+        fold,
+        root=root,
+        state_partitions=8,
+        fail_after_batches=fail_after_batches,
+    )
 
     merged = (
         spark.read.parquet(os.path.join(sketch_dir, "b*"))
@@ -818,14 +780,7 @@ def run_streaming_topk(
         # one-pass key-range staging (r10; see stage_ordered_ranges)
         stage_ordered_ranges(keys, "event_id", staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(f"event_id long, {key_col} string")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     counts_dir = os.path.join(root, "counts")
-    done_in_run = {"n": 0}
 
     def fold(batch_df, batch_id):
         # batch_id-keyed overwrite: replay-idempotent (see
@@ -835,22 +790,15 @@ def run_streaming_topk(
         ).write.mode("overwrite").parquet(
             os.path.join(counts_dir, f"b{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        spark,
+        parquet_files(f"event_id long, {key_col} string", staged),
+        fold,
+        root=root,
+        state_partitions=8,
+        fail_after_batches=fail_after_batches,
+    )
 
     return (
         spark.read.parquet(os.path.join(counts_dir, "b*"))
@@ -919,14 +867,7 @@ def run_streaming_quantiles(
         # helper (r10 — was approxQuantile + 4 sequential writes)
         stage_ordered_ranges(rows, key_col, staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(f"{key_col} long, {value_col} double")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     bins_dir = os.path.join(root, "bins")
-    done_in_run = {"n": 0}
 
     def fold(batch_df, batch_id):
         # batch_id-keyed overwrite: replay-idempotent (see
@@ -936,22 +877,15 @@ def run_streaming_quantiles(
         ).write.mode("overwrite").parquet(
             os.path.join(bins_dir, f"b{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        spark,
+        parquet_files(f"{key_col} long, {value_col} double", staged),
+        fold,
+        root=root,
+        state_partitions=8,
+        fail_after_batches=fail_after_batches,
+    )
 
     return quantiles_from_bins(
         spark.read.parquet(os.path.join(bins_dir, "b*")),
@@ -1013,14 +947,7 @@ def run_streaming_hll(
         # one-pass key-range staging (r10; see stage_ordered_ranges)
         stage_ordered_ranges(rows, key_col, staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(f"{key_col} long, {group_col} string")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     regs_dir = os.path.join(root, "regs")
-    done_in_run = {"n": 0}
 
     def fold(batch_df, batch_id):
         hll_registers(batch_df, key_col, group_col).groupBy(
@@ -1028,22 +955,15 @@ def run_streaming_hll(
         ).agg(F.max("rho").alias("rho")).write.mode("overwrite").parquet(
             os.path.join(regs_dir, f"b{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        spark,
+        parquet_files(f"{key_col} long, {group_col} string", staged),
+        fold,
+        root=root,
+        state_partitions=8,
+        fail_after_batches=fail_after_batches,
+    )
 
     merged = (
         spark.read.parquet(os.path.join(regs_dir, "b*"))
@@ -1119,17 +1039,8 @@ def run_streaming_markov(
         # one-pass time-range staging (r10; see stage_ordered_ranges)
         stage_ordered_ranges(rows, "us", staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(
-            "user_id long, us long, event_id long, event_type string"
-        )
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     counts_dir = os.path.join(root, "counts")
     state_dir = os.path.join(root, "state")
-    done_in_run = {"n": 0}
 
     def _latest_per_user(df):
         w = Window.partitionBy("user_id").orderBy(
@@ -1186,22 +1097,17 @@ def run_streaming_markov(
         _latest_per_user(batch_df).write.mode("overwrite").parquet(
             os.path.join(state_dir, f"b{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        spark,
+        parquet_files(
+            "user_id long, us long, event_id long, event_type string", staged
+        ),
+        fold,
+        root=root,
+        state_partitions=8,
+        fail_after_batches=fail_after_batches,
+    )
 
     merged = (
         spark.read.parquet(os.path.join(counts_dir, "b*"))

@@ -1,4 +1,5 @@
-"""Crash-atomic staging guard shared by every streaming harness.
+"""Crash-atomic staging guard and the one query drain shared by
+every streaming harness.
 
 Each run_streaming_* stages its input waves as parquet under
 ``root/in`` and skips the write when resuming from a checkpoint. A
@@ -9,11 +10,118 @@ serve results over missing records (review r7). Spark's committer
 writes the ``_SUCCESS`` marker only after every task commits — that
 marker, not the directory, is the completion signal; incomplete
 leftovers are simply overwritten.
+
+Every bounded replay then runs through :func:`drain`, the only place
+that starts and awaits a query.
 """
 
 from __future__ import annotations
 
 import os
+import statistics
+import uuid
+
+from etl_gcp_spark import metering
+
+
+def child_session(spark, conf: dict[str, str]):
+    """``spark.newSession()`` with every runtime setting of ``spark``
+    copied, then ``conf`` applied; ``spark`` itself is never written.
+    The copy is needed: a bare child starts from the static conf
+    (measured on pyspark 4.1.2: a parent at 4 shuffle partitions and
+    timezone ``UTC`` gave a child at 32 and ``Etc/UTC``)."""
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    for key, value in conf.items():
+        child.conf.set(key, value)
+    return child
+
+
+def parquet_files(schema: str, path: str):
+    """:func:`drain` source: the parquet files under ``path``, one
+    file per microbatch."""
+    return lambda session: (
+        session.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(path)
+    )
+
+
+def drain(
+    spark,
+    source,
+    sink,
+    *,
+    root: str | None = None,
+    state_partitions: int | None = None,
+    fail_after_batches: int | None = None,
+):
+    """Run ``source(session)`` as one ``availableNow`` query to the end.
+
+    ``source`` is a callable because a stream is bound to the session
+    that built it. That session is ``spark`` unless
+    ``state_partitions`` is given; then it is a :func:`child_session`
+    with ``spark.sql.shuffle.partitions`` pinned, so concurrent
+    callers never see each other's override. (Listeners on ``spark``
+    see no progress from a child's queries, so only a pinned drain
+    pays for one.)
+
+    ``sink`` is a ``foreachBatch`` function ``(batch_df, batch_id)``,
+    or an output mode: then the query fills a memory sink and drain
+    returns its rows, with the catalog entry already dropped so the
+    buffer lives only as long as the returned frame.
+
+    ``root`` checkpoints at ``root/ckpt``, so a rerun resumes.
+    ``fail_after_batches`` raises after that many sink calls of this
+    run — after the sink's writes, before the checkpoint commit — so
+    the recovery tests see the batch replayed into the sink's
+    batch_id-keyed overwrites. Each finished query adds its batches,
+    input rows, median batch ms and last state rows to
+    :mod:`metering` under ``stream.*``.
+    """
+    session = spark
+    if state_partitions is not None:
+        session = child_session(
+            spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
+        )
+    writer = source(session).writeStream.trigger(availableNow=True)
+    if root is not None:
+        writer = writer.option("checkpointLocation", os.path.join(root, "ckpt"))
+    if isinstance(sink, str):
+        name = f"mem_{uuid.uuid4().hex}"
+        writer = writer.format("memory").queryName(name).outputMode(sink)
+    else:
+        done_in_run = [0]
+
+        def each_batch(batch_df, batch_id):
+            sink(batch_df, batch_id)
+            done_in_run[0] += 1
+            if fail_after_batches and done_in_run[0] >= fail_after_batches:
+                raise RuntimeError("injected crash (recovery test)")
+
+        writer = writer.foreachBatch(each_batch)
+    q = writer.start()
+    q.awaitTermination()
+    progress = q.recentProgress
+    if progress:
+        metering.add("stream.batches", len(progress))
+        metering.add("stream.input_rows", sum(p.numInputRows for p in progress))
+        metering.add(
+            "stream.batch_ms_p50",
+            statistics.median(p.batchDuration for p in progress),
+        )
+        metering.add(
+            "stream.state_rows",
+            sum(o.numRowsTotal for o in progress[-1].stateOperators),
+        )
+    if not isinstance(sink, str):
+        return None
+    out = session.table(name)
+    session.catalog.dropTempView(name)
+    return out
 
 
 def staged_ready(path: str) -> bool:

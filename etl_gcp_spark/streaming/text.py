@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_gcp_spark.metering import timed as _timed_phase
-from etl_gcp_spark.streaming.staging import staged_ready
+from etl_gcp_spark.streaming.staging import drain, parquet_files, staged_ready
 
 _metered_build = _timed_phase("build")
 
@@ -97,8 +97,6 @@ def run_streaming_text_ingest(
             n_batches
         ).write.mode("overwrite").parquet(staged)
 
-    done_in_run = {"n": 0}
-
     def ingest(batch_df, batch_id):
         toks = batch_df.select(
             "doc_id", F.explode(tokens(F.col("text"))).alias("term")
@@ -144,26 +142,14 @@ def run_streaming_text_ingest(
             )
         finally:
             posting.unpersist()
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the engine must replay this batch_id and the
-            # overwrites above must absorb the replay
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    drain(
+        spark,
+        parquet_files(DOCUMENTS_SCHEMA, staged),
+        ingest,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     # serve over base ∪ appends with bucket pruning on both trees
     buckets = sorted({poly_hash_py(t) % n_buckets for t in query_terms})
@@ -250,31 +236,18 @@ def run_streaming_text_erasure(
             "doc_id"
         ).repartition(n_batches).write.mode("overwrite").parquet(staged)
 
-    done_in_run = {"n": 0}
-
     def ingest(batch_df, batch_id):
         batch_df.select("doc_id").write.mode("overwrite").parquet(
             os.path.join(index, "tombstones", f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replay must rewrite only its own slice
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema("doc_id long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    drain(
+        spark,
+        parquet_files("doc_id long", staged),
+        ingest,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     return bm25_index_topk(spark, index, query_terms, k=k, n_buckets=n_buckets)
 
@@ -376,7 +349,6 @@ def run_streaming_decontamination(
         )
 
     bg_dir = os.path.join(root, "benchgrams")
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         batch_grams = (
@@ -439,25 +411,14 @@ def run_streaming_decontamination(
         ).write.mode("overwrite").parquet(
             os.path.join(root, "verdicts", f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replay must rewrite only its own slices
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    drain(
+        spark,
+        parquet_files(DOCUMENTS_SCHEMA, staged),
+        ingest,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     corpus = spark.read.parquet(corpus_path)
     v_dir = os.path.join(root, "verdicts")

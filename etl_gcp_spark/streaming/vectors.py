@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 # serve_sec separately — at scale the build is a rare batch job while
 # serve latency is the tracked number (etl_gcp_spark/metering.py)
 from etl_gcp_spark.metering import timed as _timed_phase
-from etl_gcp_spark.streaming.staging import staged_ready
+from etl_gcp_spark.streaming.staging import drain, parquet_files, staged_ready
 
 _metered_build = _timed_phase("build")
 
@@ -115,7 +115,6 @@ def run_streaming_ivf_ingest(
     )
     labels = [int(r["cell"]) for r in cents]
     cmat = [list(r["centroid"]) for r in cents]
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         from etl_gcp_spark.functions.similarity import (
@@ -135,26 +134,14 @@ def run_streaming_ivf_ingest(
             .mode("overwrite")
             .parquet(os.path.join(appends, f"batch={batch_id}"))
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink write, BEFORE the checkpoint commit
-            # — the engine must replay this batch_id and the overwrite
-            # above must absorb the replay
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    drain(
+        spark,
+        parquet_files(EMBEDDINGS_SCHEMA, staged),
+        ingest,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     if compact:
         from etl_gcp_spark.functions.similarity import ivf_index_compact
@@ -248,8 +235,6 @@ def run_streaming_drift_report(
         c = F.array(*[F.lit(float(x)) for x in cent])
         return _dot(v, c) / (F.sqrt(_dot(v, v)) * F.sqrt(_dot(c, c)))
 
-    done_in_run = {"n": 0}
-
     def ingest(batch_df, batch_id):
         allv = batch_df.select(
             "vec_id", _as_double(F.col("embedding")).alias("__v")
@@ -273,25 +258,14 @@ def run_streaming_drift_report(
             .write.mode("overwrite")
             .parquet(os.path.join(state, f"batch={batch_id}"))
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the state write, BEFORE the checkpoint
-            # commit — replay must absorb the overwrite
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    drain(
+        spark,
+        parquet_files(EMBEDDINGS_SCHEMA, staged),
+        ingest,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     g = (
         spark.read.option("basePath", state)
@@ -386,31 +360,18 @@ def run_streaming_ivf_erasure(
             "vec_id"
         ).repartition(n_batches).write.mode("overwrite").parquet(staged)
 
-    done_in_run = {"n": 0}
-
     def ingest(batch_df, batch_id):
         batch_df.select("vec_id").write.mode("overwrite").parquet(
             os.path.join(index, "tombstones", f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replay must rewrite only its own slice
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema("vec_id long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    drain(
+        spark,
+        parquet_files("vec_id long", staged),
+        ingest,
+        root=root,
+        fail_after_batches=fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     return ivf_index_topk(
         spark, index, query_ids=query_ids or list(range(10)),

@@ -43,18 +43,18 @@ def main(argv: list[str] | None = None) -> int:
         quality_gate,
         quality_metrics,
     )
+    from etl_gcp_spark.session import get_spark
     from etl_gcp_spark.sources.readers import load_table
 
-    # reuse an active session if the caller has one (and leave it
-    # running); only stop a session this CLI itself created
-    owned = SparkSession.getActiveSession() is None
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("etl-gcp-spark-validate")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # reuse an active session if the caller has one — as it is: a
+    # builder's getOrCreate would write the builder's settings into
+    # it — and leave it running; only stop a session this CLI created
+    spark = SparkSession.getActiveSession()
+    owned = spark is None
+    if owned:
+        spark = get_spark(
+            "etl-gcp-spark-validate", master="local[*]", shuffle_partitions=32
+        )
     try:
         pairs = [d.split(":") for d in args.distinct]
         df = load_table(spark, args.sf_dir, args.table)

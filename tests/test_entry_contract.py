@@ -83,17 +83,23 @@ def test_registry_outputs_scalar_only(spark, sf_dir):
     Runs the 311 builds through a thread pool: entry construction is
     dominated by serialized driver latency (streaming runners, index
     writes), so one-at-a-time took ~13.5 min of the suite's 41 — the
-    single largest driver-pytest cost (VERDICT r10 item 3). Safety
-    audit for concurrency: every entry's scratch root is either
-    uuid4-suffixed or a per-entry-named tempdir (no shared paths);
-    temp views are only registered with identical definitions
-    (register_views over the same sf_dir) or entry-private names; the
-    pin ledger is lock-guarded in __spark_entry__; per-entry
-    shuffle-partition conf twiddles alter only plan shape, never
-    schemas or values."""
+    single largest driver-pytest cost (VERDICT r10 item 3). The pool
+    doubles as a concurrency check on the shared session: temp views
+    are only registered with identical definitions (register_views
+    over the same sf_dir) or entry-private names, the pin ledger is
+    lock-guarded in __spark_entry__, and per-query overrides live on
+    child sessions — so the fixture's conf must come out of the pool
+    exactly as it went in."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql.types import ArrayType, MapType, StructType
+
+    from etl_gcp_spark.sources.readers import load_table
+
+    # load_table pins two idempotent reader settings (UTC, nanosAsLong)
+    # on first use; take the snapshot after them
+    load_table(spark, sf_dir, "events")
+    conf_before = spark.conf.getAll
 
     def check(item):
         name, fn = item
@@ -114,6 +120,38 @@ def test_registry_outputs_scalar_only(spark, sf_dir):
         "driver-unsortable output columns (pandas sort_values would "
         f"raise on these): {bad}"
     )
+    assert spark.conf.getAll == conf_before
+
+
+def test_oracle_side_write_concurrent_writers(spark, monkeypatch):
+    """Entries sharing a side-table name (simhash_tokens, hll_*) may
+    write it at once: every writer must succeed and the fixed path
+    must end up holding exactly one complete table."""
+    import os
+    import shutil
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor
+
+    monkeypatch.delenv("SPARK_GRAFT_SKIP_ORACLE_SIDE_WRITE", raising=False)
+    name = f"test_concurrent_{uuid.uuid4().hex}"
+    path = entrymod._oracle_side_path(name)
+    df = spark.range(1000).repartition(4)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            list(
+                pool.map(
+                    lambda _: entrymod._oracle_side_write(df, name), range(8)
+                )
+            )
+        assert spark.read.parquet(path).count() == 1000
+        leftovers = [
+            e
+            for e in os.listdir(os.path.dirname(path))
+            if e.startswith(os.path.basename(path) + "_")
+        ]
+        assert not leftovers, leftovers
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_check_oracle_rejects_array_outputs():

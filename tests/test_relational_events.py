@@ -361,3 +361,160 @@ def test_streaming_outer_interval_join_eviction_cutoff(spark, sf_dir):
         & (c.cts >= p.pts - F.expr("INTERVAL 1 hour")),
     ).count()
     assert out.filter(F.col("click_id").isNotNull()).count() == n_inner
+
+
+def _staged_ints(path, n_files=3, per_file=4):
+    """``n_files`` parquet files of ``per_file`` ids each, mtimes in
+    path order — one microbatch per file under ``parquet_files``."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    for i in range(n_files):
+        f = os.path.join(path, f"part-{i}.parquet")
+        ids = range(i * per_file, (i + 1) * per_file)
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), f)
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))
+    return path
+
+
+def test_drain_child_session_inherits_runtime_conf_and_override(
+    spark, tmp_path
+):
+    """A pinned drain runs on a child session that carries the
+    caller's RUNTIME settings (a bare newSession() would fall back to
+    the static conf) plus the state-partition override."""
+    from etl_gcp_spark.streaming.staging import (
+        child_session,
+        drain,
+        parquet_files,
+    )
+
+    parent = spark.newSession()
+    parent.conf.set("spark.sql.session.timeZone", "America/New_York")
+    parent.conf.set("spark.sql.shuffle.partitions", "5")
+
+    child = child_session(
+        parent, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+    )
+    assert child.conf.get("spark.sql.session.timeZone") == "America/New_York"
+    assert child.conf.get("spark.sql.shuffle.partitions") == "5"
+    assert child.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+    files = parquet_files("id long", _staged_ints(str(tmp_path / "in")))
+    seen = {}
+
+    def source(session):
+        seen["tz"] = session.conf.get("spark.sql.session.timeZone")
+        seen["parts"] = session.conf.get("spark.sql.shuffle.partitions")
+        seen["is_parent"] = session is parent
+        return files(session)
+
+    out = drain(parent, source, "append", state_partitions=3)
+    assert sorted(r.id for r in out.collect()) == list(range(12))
+    assert seen == {"tz": "America/New_York", "parts": "3", "is_parent": False}
+    assert parent.conf.get("spark.sql.shuffle.partitions") == "5"
+
+
+def test_drain_pinned_leaves_parent_conf_unchanged_while_running(
+    spark, tmp_path
+):
+    """While a pinned drain is mid-batch on another thread, the
+    caller's session conf is exactly what it was before it started."""
+    import os
+    import threading
+
+    from etl_gcp_spark.streaming.staging import drain, parquet_files
+
+    staged = _staged_ints(str(tmp_path / "in"), n_files=2)
+    before = spark.conf.getAll
+    entered, release = threading.Event(), threading.Event()
+    seen = {}
+
+    def fold(batch_df, batch_id):
+        seen["parts"] = batch_df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions"
+        )
+        entered.set()
+        release.wait(60)
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(str(tmp_path), "out", f"b{batch_id}")
+        )
+
+    errors = []
+
+    def run():
+        try:
+            drain(
+                spark,
+                parquet_files("id long", staged),
+                fold,
+                root=str(tmp_path),
+                state_partitions=7,
+            )
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    t = threading.Thread(target=run)
+    t.start()
+    try:
+        assert entered.wait(120), "drain never reached its first batch"
+        during = spark.conf.getAll
+    finally:
+        release.set()
+        t.join(120)
+    assert not errors, errors
+    assert seen["parts"] == "7"
+    assert during == before
+    assert spark.conf.getAll == before
+
+
+def test_drain_crash_then_resume_equals_clean_run(spark, tmp_path):
+    """fail_after_batches=1 raises only after the first batch's sink
+    write; a resume from the same root finishes with exactly the rows
+    of a clean run, and the progress of each finished query lands in
+    metering under stream.*."""
+    import os
+
+    import pytest
+
+    from etl_gcp_spark import metering
+    from etl_gcp_spark.streaming.staging import drain, parquet_files
+
+    staged = _staged_ints(str(tmp_path / "in"))
+
+    def sink_into(root):
+        def sink(batch_df, batch_id):
+            batch_df.write.mode("overwrite").parquet(
+                os.path.join(root, "out", f"b{batch_id}")
+            )
+
+        return sink
+
+    def rows(root):
+        return sorted(
+            r.id for r in spark.read.parquet(os.path.join(root, "out", "b*")).collect()
+        )
+
+    clean = str(tmp_path / "clean")
+    metering.reset()
+    drain(spark, parquet_files("id long", staged), sink_into(clean), root=clean)
+    meters = metering.snapshot()
+    assert meters["stream.batches"] == 3
+    assert meters["stream.input_rows"] == 12
+
+    crashed = str(tmp_path / "crashed")
+    with pytest.raises(Exception, match="injected crash"):
+        drain(
+            spark,
+            parquet_files("id long", staged),
+            sink_into(crashed),
+            root=crashed,
+            fail_after_batches=1,
+        )
+    # the crash came AFTER the first batch's write, before its commit
+    assert os.listdir(os.path.join(crashed, "out")) == ["b0"]
+    drain(spark, parquet_files("id long", staged), sink_into(crashed), root=crashed)
+    assert rows(crashed) == rows(clean) == list(range(12))
