@@ -15,7 +15,6 @@ audit stamps frozen to a fixed literal.
 
 from __future__ import annotations
 
-import functools
 import datetime
 import os
 import tempfile
@@ -24,6 +23,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# release_pins is public: it frees the calling thread's last registry
+# call (pins and scratch roots; see etl_gcp_spark.caching)
+from etl_gcp_spark.caching import ledgered, release_pins, scratch_root  # noqa: F401
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -35,50 +38,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return load_table(spark, sf_dir, name)
-
-
-# Pinned-frame ledger: operators that persist() an intermediate tag it
-# on their result (etl_gcp_spark.caching.tag_pinned). The pins must
-# outlive the callable (the caller still has to materialize the lazy
-# result), so each registry call RELEASES THE PREVIOUS call's pins and
-# records its own — a long-lived session running entries back-to-back
-# retains at most one entry's worth of cached frames instead of
-# accumulating them for the session lifetime. release_pins() drops the
-# last one.
-_PIN_LEDGER: list[DataFrame] = []
-# ledger ops are lock-guarded: concurrent registry calls (the contract
-# test's thread pool) would otherwise race the pop-until-empty loop
-# (IndexError between the emptiness check and the pop). Unpersisting a
-# frame another in-flight entry still reads is safe — Spark recomputes
-# uncached blocks — so the lock only has to make the LIST operations
-# atomic, not serialize entry execution.
-_PIN_LOCK = threading.Lock()
-
-
-def release_pins() -> None:
-    """Unpersist every intermediate frame still pinned by the most
-    recent registry call. Idempotent; safe any time."""
-    from etl_gcp_spark.caching import unpersist_pinned
-
-    while True:
-        with _PIN_LOCK:
-            if not _PIN_LEDGER:
-                return
-            df = _PIN_LEDGER.pop()
-        unpersist_pinned(df)
-
-
-def _ledgered(fn):
-    @functools.wraps(fn)
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        release_pins()
-        df = fn(spark, sf_dir)
-        if getattr(df, "_etl_pinned_frames", ()):
-            with _PIN_LOCK:
-                _PIN_LEDGER.append(df)
-        return df
-
-    return run
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -513,10 +472,7 @@ def _q_ingest_jsonl(spark, sf_dir):
     parquet directly, which is what the oracle does."""
     from etl_gcp_spark.sources.readers import read_jsonl
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_jsonl_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("jsonl")
     _t(spark, sf_dir, "documents").write.mode("overwrite").json(path)
     back = read_jsonl(
         spark,
@@ -950,14 +906,7 @@ def _q_ingest_csv(spark, sf_dir):
     from etl_gcp_spark.sinks.writers import write_chunked_csv
     from etl_gcp_spark.sources.readers import read_csv_inferred
 
-    # own prefix, NOT shared with write_roundtrip_csv: the two entries
-    # previously overwrote one directory, which is fine run-to-run but
-    # races under any concurrent-entry harness (the contract test's
-    # thread pool)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_csvin_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("csvin")
     write_chunked_csv(_t(spark, sf_dir, "nation"), path, rows_per_file=10)
     return read_csv_inferred(spark, path).select(
         "n_nationkey", "n_name", "n_regionkey"
@@ -1010,10 +959,7 @@ def _q_write_roundtrip(spark, sf_dir):
     re-read scan must prune to the o_orderstatus=F directory."""
     from etl_gcp_spark.sinks.writers import write_table
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_part_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("part")
     write_table(
         _t(spark, sf_dir, "orders"), path, partition_by=["o_orderstatus"]
     )
@@ -1214,9 +1160,7 @@ def _q_streaming_enrich(spark, sf_dir):
 def _q_write_roundtrip_xml(spark, sf_dir):
     """Spark 4 built-in XML source (S10 in a third format): write
     region as XML rows, read back with rowTag, project."""
-    path = os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_xml_{os.path.basename(sf_dir)}"
-    )
+    path = scratch_root("xml")
     (
         _t(spark, sf_dir, "region")
         .select("r_regionkey", "r_name")
@@ -1273,10 +1217,7 @@ def _q_corrupt_record_ingest(spark, sf_dir):
     are quarantined in-band, not fatal."""
     from etl_gcp_spark.sources.readers import read_jsonl_permissive
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_badjson_{os.path.basename(sf_dir)}.jsonl",
-    )
+    path = scratch_root("badjson")
     with open(path, "w") as fh:
         for i in range(8):
             fh.write('{"k": %d, "v": %d.5}\n' % (i, i * 10))
@@ -1296,10 +1237,7 @@ def _q_schema_evolution_read(spark, sf_dir):
     to an existing layout; mergeSchema read back-fills NULLs."""
     from etl_gcp_spark.sinks.writers import write_table
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_evolve_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("evolve")
     orders = _t(spark, sf_dir, "orders")
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -1374,10 +1312,7 @@ def _q_python_datasource(spark, sf_dir):
         write_reference_chunks,
     )
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_chunks_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("chunks")
     write_reference_chunks(
         _t(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
@@ -1423,10 +1358,7 @@ def _q_dynamic_partition_overwrite(spark, sf_dir):
     (filtered to high-value orders); other partitions untouched."""
     from etl_gcp_spark.sinks.writers import write_table
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_dynpart_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("dynpart")
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -1518,9 +1450,7 @@ def _q_write_roundtrip_orc(spark, sf_dir):
     (same Catalyst scan pipeline; vectorized ORC reader)."""
     from etl_gcp_spark.sinks.writers import write_table
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_orc_{os.path.basename(sf_dir)}"
-    )
+    path = scratch_root("orc")
     write_table(
         _t(spark, sf_dir, "supplier").select(
             "s_suppkey", "s_nationkey", "s_acctbal"
@@ -1545,9 +1475,7 @@ def _q_write_roundtrip_csv(spark, sf_dir):
     duplication across the file-size boundary)."""
     from etl_gcp_spark.sinks.writers import write_chunked_csv
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_csv_{os.path.basename(sf_dir)}"
-    )
+    path = scratch_root("csv")
     write_chunked_csv(
         _t(spark, sf_dir, "customer").select(
             "c_custkey", "c_nationkey", "c_acctbal"
@@ -1571,11 +1499,8 @@ def _q_compact_small_files(spark, sf_dir):
     compact to one, prove row preservation + the new file count."""
     from etl_gcp_spark.sinks.writers import compact_files, write_table
 
-    base = os.path.basename(sf_dir)
-    frag = os.path.join(tempfile.gettempdir(), f"etl_gcp_spark_frag_{base}")
-    compacted = os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_compact_{base}"
-    )
+    frag = scratch_root("frag")
+    compacted = scratch_root("compact")
     write_table(
         _t(spark, sf_dir, "customer").repartition(16),
         frag,
@@ -1766,10 +1691,7 @@ def _q_ivf_index_topk(spark, sf_dir):
         ivf_index_topk,
     )
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_ivfidx_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("ivfidx")
     build_ivf_index(
         _t(spark, sf_dir, "embeddings"), path, n_cells=32, n_iters=2
     )
@@ -1796,10 +1718,7 @@ def _q_ann_ivf_filtered_topk(spark, sf_dir):
         ivf_index_topk,
     )
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_ivffilt_{os.getpid()}_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("ivffilt")
     build_ivf_index(
         _t(spark, sf_dir, "embeddings"), path, n_cells=32, n_iters=2,
         meta_cols=("label",),
@@ -1828,10 +1747,7 @@ def _q_ann_ivf_erasure_topk(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_ivferase_{os.getpid()}_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("ivferase")
     build_ivf_index(emb, path, n_cells=32, n_iters=2)
     ivf_index_erase(
         spark, path, emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
@@ -1856,24 +1772,9 @@ def _q_ann_filtered_recall_report(spark, sf_dir):
         filtered_recall_report,
     )
 
-    from etl_gcp_spark.streaming.staging import staged_ready
-
     emb = _t(spark, sf_dir, "embeddings")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_ivffrr_{os.getpid()}_{os.path.basename(sf_dir)}",
-    )
-    # an audit serves the artifact it audits — build only when this
-    # process hasn't already (repeat runs measure the audit, not a
-    # redundant rebuild). The guard watches CENTROIDS, the LAST
-    # artifact build_ivf_index commits: a crash between the vectors
-    # and centroids writes leaves a committed vectors tree whose
-    # reuse would serve stale/missing centroids (ADVICE r7) —
-    # centroids' committer marker implies both trees are complete.
-    if not staged_ready(os.path.join(path, "centroids")):
-        build_ivf_index(
-            emb, path, n_cells=32, n_iters=2, meta_cols=("label",)
-        )
+    path = scratch_root("ivffrr")
+    build_ivf_index(emb, path, n_cells=32, n_iters=2, meta_cols=("label",))
     return filtered_recall_report(
         spark, emb, path,
         query_ids=list(range(10)), k=5, n_probe=4, label_value=1,
@@ -1902,10 +1803,7 @@ def _q_ivf_retrain_swap(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_ivfretr_{os.getpid()}_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("ivfretr")
     build_ivf_index(
         emb.filter(F.col("vec_id") < 400), path, n_cells=32, n_iters=2
     )
@@ -1955,10 +1853,7 @@ def _q_bitext_margin_pairs_ann(spark, sf_dir):
     over the two mined-pair sets."""
     from etl_gcp_spark.functions.similarity import bitext_ann_recall_report
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_bitextann_{os.getpid()}_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("bitextann")
     return bitext_ann_recall_report(
         _t(spark, sf_dir, "embeddings"),
         path,
@@ -1985,10 +1880,7 @@ def _q_ivf_index_append_topk(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_ivfapx_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("ivfapx")
     build_ivf_index(
         emb.filter(F.col("vec_id") < 400), path, n_cells=32, n_iters=2
     )
@@ -2110,18 +2002,12 @@ def _q_bm25_index_topk(spark, sf_dir):
     term-hash bucket + doclen/ + stats/, then serve BM25 from ONLY
     the probed buckets' partitions — bit-equal to the fused
     bm25_topk, so its oracle attaches to the served output."""
-    import os as _os
-    import tempfile as _tf
-
     from etl_gcp_spark.functions.text import (
         bm25_index_topk,
         text_index_build,
     )
 
-    idx = _os.path.join(
-        _tf.gettempdir(),
-        f"etl_gcp_spark_textidx_{_os.path.basename(sf_dir)}",
-    )
+    idx = scratch_root("textidx")
     text_index_build(_t(spark, sf_dir, "documents"), idx)
     return bm25_index_topk(
         spark, idx, ["spark", "vector", "stream"], k=10
@@ -2138,18 +2024,12 @@ def _q_bm25_filtered_topk(spark, sf_dir):
     from the filtered document set, so the serve is bit-equal to the
     fused bm25_topk over documents WHERE lang='en' — which is exactly
     what the oracle computes."""
-    import os as _os
-    import tempfile as _tf
-
     from etl_gcp_spark.functions.text import (
         bm25_index_filtered_topk,
         text_index_build,
     )
 
-    idx = _os.path.join(
-        _tf.gettempdir(),
-        f"etl_gcp_spark_textfidx_{_os.getpid()}_{_os.path.basename(sf_dir)}",
-    )
+    idx = scratch_root("textfidx")
     text_index_build(
         _t(spark, sf_dir, "documents"), idx, meta_cols=("lang",)
     )
@@ -2170,9 +2050,6 @@ def _q_text_index_resize_topk(spark, sf_dir):
     count. BM25 is bucket-invariant, so the serve is bit-equal to
     the fused scorer over the survivors: the erasure entry's oracle
     attaches verbatim."""
-    import os as _os
-    import tempfile as _tf
-
     from etl_gcp_spark.functions.text import (
         bm25_index_topk,
         text_index_build,
@@ -2180,10 +2057,7 @@ def _q_text_index_resize_topk(spark, sf_dir):
         text_index_resize,
     )
 
-    idx = _os.path.join(
-        _tf.gettempdir(),
-        f"etl_gcp_spark_textrsz_{_os.getpid()}_{_os.path.basename(sf_dir)}",
-    )
+    idx = scratch_root("textrsz")
     docs = _t(spark, sf_dir, "documents")
     text_index_build(docs, idx, n_buckets=64)
     text_index_erase(
@@ -2209,19 +2083,13 @@ def _q_text_index_erasure_topk(spark, sf_dir):
     (pytest-locked: tombstoned rows gone from every artifact, serve
     unchanged). Here: erase doc_id % 7 == 0 via the bulk DataFrame
     path (no driver collect), then serve."""
-    import os as _os
-    import tempfile as _tf
-
     from etl_gcp_spark.functions.text import (
         bm25_index_topk,
         text_index_build,
         text_index_erase,
     )
 
-    idx = _os.path.join(
-        _tf.gettempdir(),
-        f"etl_gcp_spark_textedx_{_os.getpid()}_{_os.path.basename(sf_dir)}",
-    )
+    idx = scratch_root("textedx")
     docs = _t(spark, sf_dir, "documents")
     text_index_build(docs, idx)
     text_index_erase(
@@ -2283,10 +2151,6 @@ def _q_text_index_append(spark, sf_dir):
     existing bucket partitions; postings never rewritten; additive
     stats refreshed from doclen only), then serve — bit-equal to the
     fused scorer over the full corpus, one oracle for the lifecycle."""
-    import os as _os
-    import shutil as _sh
-    import tempfile as _tf
-
     from etl_gcp_spark.functions.text import (
         bm25_index_topk,
         text_index_append,
@@ -2297,11 +2161,7 @@ def _q_text_index_append(spark, sf_dir):
     half = docs.agg(
         F.percentile_approx("doc_id", 0.5, 1000000).alias("m")
     ).collect()[0]["m"]
-    idx = _os.path.join(
-        _tf.gettempdir(),
-        f"etl_gcp_spark_textidx_app_{_os.path.basename(sf_dir)}",
-    )
-    _sh.rmtree(idx, ignore_errors=True)
+    idx = scratch_root("textidx_app")
     text_index_build(docs.filter(F.col("doc_id") <= half), idx)
     text_index_append(docs.filter(F.col("doc_id") > half), idx)
     return bm25_index_topk(
@@ -2315,10 +2175,6 @@ def _q_text_index_compact(spark, sf_dir):
     then serve — compaction moves bytes, not semantics; the fused
     oracle still attaches. Completes the text-index lifecycle:
     build -> append -> compact -> serve."""
-    import os as _os
-    import shutil as _sh
-    import tempfile as _tf
-
     from etl_gcp_spark.functions.text import (
         bm25_index_topk,
         text_index_append,
@@ -2330,11 +2186,7 @@ def _q_text_index_compact(spark, sf_dir):
     half = docs.agg(
         F.percentile_approx("doc_id", 0.5, 1000000).alias("m")
     ).collect()[0]["m"]
-    idx = _os.path.join(
-        _tf.gettempdir(),
-        f"etl_gcp_spark_textidx_cmp_{_os.path.basename(sf_dir)}",
-    )
-    _sh.rmtree(idx, ignore_errors=True)
+    idx = scratch_root("textidx_cmp")
     text_index_build(docs.filter(F.col("doc_id") <= half), idx)
     text_index_append(docs.filter(F.col("doc_id") > half), idx)
     text_index_compact(spark, idx)
@@ -2723,8 +2575,6 @@ def _q_python_datasource_stream(spark, sf_dir):
     availableNow pass each against the same checkpoint — the second
     pass consumes ONLY the new chunks (engine-managed offsets); the
     union equals the plain table, which is what the oracle runs."""
-    import uuid as _uuid
-
     from etl_gcp_spark.sources.pyds import stream_chunk_ingest
 
     nation = _t(spark, sf_dir, "nation").select(
@@ -2734,9 +2584,7 @@ def _q_python_datasource_stream(spark, sf_dir):
         nation.filter(F.col("n_nationkey") < 13),
         nation.filter(F.col("n_nationkey") >= 13),
     ]
-    root = os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_pydss_{_uuid.uuid4().hex}"
-    )
+    root = scratch_root("pydss")
     return stream_chunk_ingest(spark, waves, root)
 
 
@@ -3302,10 +3150,7 @@ def _q_ingest_binaryfile(spark, sf_dir):
     writer, same posture as sources/pyds.py), read back as binary
     and fingerprinted JVM-side; the oracle recomputes length + md5
     from the documents table directly."""
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_bin_{os.path.basename(sf_dir)}",
-    )
+    path = scratch_root("bin")
     os.makedirs(path, exist_ok=True)
     rows = (
         _t(spark, sf_dir, "documents")
@@ -3722,14 +3567,7 @@ def _q_dedup_index_maintenance_audit(spark, sf_dir):
         dedup_index_maintenance_audit,
     )
 
-    # per-process dir component (ADVICE r6): a bench run overlapping
-    # an oracle sweep on the same scale must not interleave the
-    # overwrite-base/append-delta writes on one shared bands dir —
-    # that corrupts the index leg or double-appends the delta.
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_lshidx_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    idx = scratch_root("lshidx")
     return dedup_index_maintenance_audit(
         _t(spark, sf_dir, "documents"), idx
     )
@@ -3999,12 +3837,7 @@ def _q_entity_clusters_increment(spark, sf_dir):
         entity_clusters_increment_audit,
     )
 
-    # per-process dir component: same concurrent-writer discipline as
-    # the LSH maintenance audit (ADVICE r6)
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_eciidx_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    idx = scratch_root("eciidx")
     return entity_clusters_increment_audit(
         _t(spark, sf_dir, "customer"), "c_custkey", "c_name", idx
     )
@@ -4464,8 +4297,8 @@ def _q_stream_sessions(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # every callable goes through the pinned-frame ledger (see above)
-    return {k: _ledgered(fn) for k, fn in {
+    # every callable goes through the per-thread ledger (see above)
+    return {k: ledgered(fn) for k, fn in {
     # --- round-11 correctness window (the driver verifies ~the
     # first 50 keys in dict order). Slot 1: bpe_segment_counts —
     # the r10 net-new parked behind the full r10 window, still

@@ -65,10 +65,11 @@ def get_spark(
     # methodology is unchanged; cluster deployments set their
     # scale-appropriate values here instead of editing code.
     env_conf = os.environ.get("SPARK_GRAFT_SPARK_CONF", "")
-    for pair in env_conf.split(";"):
-        if "=" in pair:
-            k, _, v = pair.partition("=")
-            builder = builder.config(k.strip(), v.strip())
+    for pair in filter(str.strip, env_conf.split(";")):
+        k, eq, v = pair.partition("=")
+        if not eq:
+            raise ValueError(f"SPARK_GRAFT_SPARK_CONF: {pair!r} is not key=value")
+        builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

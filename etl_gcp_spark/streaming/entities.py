@@ -36,12 +36,11 @@ replayed patch and lose relabels).
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_gcp_spark.caching import scratch_root
 from etl_gcp_spark.metering import timed as _timed_phase
 from etl_gcp_spark.streaming.staging import drain, parquet_files, staged_ready
 
@@ -277,10 +276,7 @@ def run_streaming_entity_ingest(
         probe_new_edges,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_entstream_{uuid.uuid4().hex}",
-    )
+    root = root or scratch_root("entstream")
     records = spark.read.parquet(customer_path).select(
         "c_custkey", "c_name"
     )
@@ -427,10 +423,7 @@ def run_streaming_entity_erasure(
         fuzzy_pairs,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_enterstream_{uuid.uuid4().hex}",
-    )
+    root = root or scratch_root("enterstream")
     records = spark.read.parquet(customer_path).select(
         "c_custkey", "c_name"
     )

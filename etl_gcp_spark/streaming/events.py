@@ -24,12 +24,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_gcp_spark.caching import scratch_root
 from etl_gcp_spark.streaming.staging import (
     child_session,
     drain,
@@ -71,9 +70,7 @@ def _stream_events(session: SparkSession, events_path: str) -> DataFrame:
     caller's), so the ``nanosAsLong`` reader setting lands there.
     """
     if os.path.isfile(events_path):
-        staged = os.path.join(
-            tempfile.gettempdir(), f"etl_gcp_spark_stream_{uuid.uuid4().hex}"
-        )
+        staged = scratch_root("stream")
         os.makedirs(staged)
         shutil.copy(events_path, os.path.join(staged, "part-0.parquet"))
         events_path = staged
@@ -378,9 +375,7 @@ def run_streaming_upsert(
 
     from etl_gcp_spark.operators.cdc import cdc_upsert
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_upsert_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("upsert")
     staged = os.path.join(root, "in")
     if not staged_ready(staged):
         # normalize ts to microsecond TIMESTAMP at stage time so the
@@ -546,9 +541,7 @@ def run_streaming_minhash_dedup(
         with_shingles,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_sdedup_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("sdedup")
     staged = os.path.join(root, "in")
     if not staged_ready(staged):
         docs = spark.read.parquet(docs_path).select("doc_id", "text")
@@ -696,9 +689,7 @@ def run_streaming_cms(
         cms_point_queries,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_scms_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("scms")
     staged = os.path.join(root, "in")
     keys = events.filter(F.col(key_col).isNotNull()).select(
         F.col(key_col).cast("long").alias(key_col)
@@ -769,9 +760,7 @@ def run_streaming_topk(
     the batch oracle applies the same WHERE — stream and batch count
     the same rows.
     """
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_stopk_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("stopk")
     staged = os.path.join(root, "in")
     keys = events.filter(
         F.col("event_id").isNotNull() & F.col(key_col).isNotNull()
@@ -852,9 +841,7 @@ def run_streaming_quantiles(
         quantiles_from_bins,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_squant_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("squant")
     staged = os.path.join(root, "in")
     rows = orders.filter(
         F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
@@ -936,9 +923,7 @@ def run_streaming_hll(
         hll_registers,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_shll_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("shll")
     staged = os.path.join(root, "in")
     rows = df.filter(F.col(key_col).isNotNull()).select(
         F.col(key_col).cast("long").alias(key_col), group_col
@@ -1021,9 +1006,7 @@ def run_streaming_markov(
     """
     from pyspark.sql import Window
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_smkv_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("smkv")
     staged = os.path.join(root, "in")
     rows = events.filter(
         F.col("ts").isNotNull()

@@ -16,12 +16,11 @@ and nothing else (the same discipline as the IVF append trees).
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_gcp_spark.caching import scratch_root
 from etl_gcp_spark.metering import timed as _timed_phase
 from etl_gcp_spark.streaming.staging import drain, parquet_files, staged_ready
 
@@ -76,9 +75,7 @@ def run_streaming_text_ingest(
     )
     from etl_gcp_spark.operators.encoding import _poly_hash
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_textstream_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("textstream")
     index = os.path.join(root, "index")
     appends = os.path.join(index, "appends")
     docs = spark.read.parquet(documents_path)
@@ -221,9 +218,7 @@ def run_streaming_text_erasure(
         text_index_build,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_texterstream_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("texterstream")
     index = os.path.join(root, "index")
     docs = spark.read.parquet(documents_path)
 
@@ -303,10 +298,7 @@ def run_streaming_decontamination(
     )
     from etl_gcp_spark.operators.text_dedup import with_shingles
 
-    root = root or os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_decontstream_{uuid.uuid4().hex}",
-    )
+    root = root or scratch_root("decontstream")
     docs = spark.read.parquet(documents_path).select(
         "doc_id", "text", "source"
     )

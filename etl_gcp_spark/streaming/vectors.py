@@ -22,8 +22,6 @@ durable-sink streaming ops.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +29,7 @@ from pyspark.sql import functions as F
 # index BUILD phases are metered so bench.py can report build_sec /
 # serve_sec separately — at scale the build is a rare batch job while
 # serve latency is the tracked number (etl_gcp_spark/metering.py)
+from etl_gcp_spark.caching import scratch_root
 from etl_gcp_spark.metering import timed as _timed_phase
 from etl_gcp_spark.streaming.staging import drain, parquet_files, staged_ready
 
@@ -87,9 +86,7 @@ def run_streaming_ivf_ingest(
     )
 
     query_ids = list(range(10)) if query_ids is None else query_ids
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_ivfstream_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("ivfstream")
     index = os.path.join(root, "index")
     appends = os.path.join(index, "appends")
     emb = spark.read.parquet(embeddings_path).select("vec_id", "embedding")
@@ -205,10 +202,7 @@ def run_streaming_drift_report(
         ivf_train,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_driftstream_{uuid.uuid4().hex}",
-    )
+    root = root or scratch_root("driftstream")
     state = os.path.join(root, "state")
     emb = spark.read.parquet(embeddings_path).select("vec_id", "embedding")
 
@@ -345,9 +339,7 @@ def run_streaming_ivf_erasure(
         ivf_index_topk,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_ivferstream_{uuid.uuid4().hex}"
-    )
+    root = root or scratch_root("ivferstream")
     index = os.path.join(root, "index")
     emb = spark.read.parquet(embeddings_path)
 

@@ -86,10 +86,12 @@ def test_registry_outputs_scalar_only(spark, sf_dir):
     single largest driver-pytest cost (VERDICT r10 item 3). The pool
     doubles as a concurrency check on the shared session: temp views
     are only registered with identical definitions (register_views
-    over the same sf_dir) or entry-private names, the pin ledger is
-    lock-guarded in __spark_entry__, and per-query overrides live on
-    child sessions — so the fixture's conf must come out of the pool
-    exactly as it went in."""
+    over the same sf_dir) or entry-private names, pins and scratch
+    roots are owned per thread (etl_gcp_spark.caching), and per-query
+    overrides live on child sessions — so the fixture's conf must come
+    out of the pool exactly as it went in, and every scratch root an
+    entry made must be gone once its thread releases it."""
+    import os
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql.types import ArrayType, MapType, StructType
@@ -100,13 +102,16 @@ def test_registry_outputs_scalar_only(spark, sf_dir):
     # on first use; take the snapshot after them
     load_table(spark, sf_dir, "events")
     conf_before = spark.conf.getAll
+    scratch_before = set(os.listdir(_scratch_parent()))
 
     def check(item):
         name, fn = item
-        df = fn(spark, sf_dir)
+        fields = fn(spark, sf_dir).schema.fields
+        # a pool thread's last scope is otherwise never released
+        entrymod.release_pins()
         return [
             f"{name}.{f.name}: {f.dataType.simpleString()}"
-            for f in df.schema.fields
+            for f in fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
 
@@ -121,6 +126,92 @@ def test_registry_outputs_scalar_only(spark, sf_dir):
         f"raise on these): {bad}"
     )
     assert spark.conf.getAll == conf_before
+    leaked = set(os.listdir(_scratch_parent())) - scratch_before
+    assert not leaked, f"scratch roots outlived their registry call: {leaked}"
+
+
+def _scratch_parent() -> str:
+    """The directory every scratch root lives in. Outside a registry
+    call ``scratch_root`` creates only this parent and records
+    nothing."""
+    import os
+
+    from etl_gcp_spark.caching import scratch_root
+
+    return os.path.dirname(scratch_root("probe"))
+
+
+def test_registry_scratch_root_lives_until_same_thread_releases(
+    spark, sf_dir
+):
+    """A registry call's scratch root outlives the call (the returned
+    frame is lazy and still reads it), survives registry calls on
+    other threads, and is deleted by the same thread's next registry
+    call or release_pins()."""
+    import os
+    import threading
+
+    parent = _scratch_parent()
+    fn = entrymod.queries()["write_roundtrip_orc"]
+
+    def call() -> tuple[str, int]:
+        before = set(os.listdir(parent))
+        df = fn(spark, sf_dir)
+        (root,) = set(os.listdir(parent)) - before
+        return os.path.join(parent, root), df.count()
+
+    entrymod.release_pins()
+    first, n_rows = call()
+    assert n_rows > 0 and os.path.isdir(first)
+
+    def other_thread() -> None:
+        fn(spark, sf_dir).count()
+        entrymod.release_pins()
+
+    t = threading.Thread(target=other_thread)
+    t.start()
+    t.join()
+    assert os.path.isdir(first)
+
+    second, _ = call()
+    assert not os.path.exists(first)
+    assert os.path.isdir(second)
+    entrymod.release_pins()
+    assert not os.path.exists(second)
+
+
+def test_gettempdir_only_in_scratch_owners():
+    """Scratch paths come from caching.scratch_root; the only other
+    temp path is the fixed oracle side-table name the DuckDB oracle
+    SQL reads. A hand-built ``gettempdir()`` path anywhere else in the
+    engine would bring back unowned, leaked scratch directories."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(entrymod.__file__).resolve().parent
+    files = [
+        repo / "__spark_entry__.py",
+        *sorted((repo / "etl_gcp_spark").rglob("*.py")),
+    ]
+    found = []
+
+    def visit(node, owner):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            owner = node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name == "gettempdir":
+                found.append((path.name, owner))
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner)
+
+    for path in files:
+        visit(ast.parse(path.read_text()), None)
+    assert sorted(found) == [
+        ("__spark_entry__.py", "_oracle_side_path"),
+        ("caching.py", "scratch_root"),
+    ]
 
 
 def test_oracle_side_write_concurrent_writers(spark, monkeypatch):

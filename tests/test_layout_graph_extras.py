@@ -3,8 +3,6 @@
 from __future__ import annotations
 
 import math
-import os
-import tempfile
 
 
 def test_zorder_key_interleaves_bits(spark):
@@ -50,12 +48,12 @@ def test_zorder_buckets_are_tight_on_both_dims(spark, sf_dir):
     assert tp[len(tp) // 2] <= glob["tp"] * 0.5
 
 
-def test_write_zordered_roundtrip(spark, sf_dir):
+def test_write_zordered_roundtrip(spark, sf_dir, tmp_path):
     from etl_gcp_spark.operators.layout import write_zordered
     from etl_gcp_spark.sources.readers import load_table
 
     orders = load_table(spark, sf_dir, "orders").limit(1000)
-    path = os.path.join(tempfile.gettempdir(), "etl_gcp_spark_zorder_test")
+    path = str(tmp_path / "zorder")
     write_zordered(orders, path, ["o_custkey", "o_totalprice"], n_files=4)
     back = spark.read.parquet(path)
     assert back.count() == 1000
@@ -205,12 +203,12 @@ def test_hilbert_buckets_tighter_than_zorder_on_grid(spark):
     assert hil <= zor
 
 
-def test_write_hilbert_roundtrip(spark, sf_dir):
+def test_write_hilbert_roundtrip(spark, sf_dir, tmp_path):
     from etl_gcp_spark.operators.layout import write_hilbert
     from etl_gcp_spark.sources.readers import load_table
 
     orders = load_table(spark, sf_dir, "orders").limit(1000)
-    path = os.path.join(tempfile.gettempdir(), "etl_gcp_spark_hilbert_test")
+    path = str(tmp_path / "hilbert")
     write_hilbert(orders, path, ["o_custkey", "o_totalprice"], n_files=4)
     back = spark.read.parquet(path)
     assert back.count() == 1000

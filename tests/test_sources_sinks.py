@@ -228,3 +228,17 @@ def test_observation_metrics_piggyback_on_action(spark):
     assert df.count() == 1000  # the action
     got = obs.get
     assert got == {"n_rows": 1000, "id_sum": 499500, "n_even": 500}
+
+
+def test_spark_conf_env_rejects_pair_without_equals(monkeypatch):
+    """A SPARK_GRAFT_SPARK_CONF pair with no ``=`` is a typo, not a
+    no-op: get_spark names it instead of silently dropping it (empty
+    pairs from a trailing ``;`` stay allowed)."""
+    from etl_gcp_spark.session import get_spark
+
+    monkeypatch.setenv(
+        "SPARK_GRAFT_SPARK_CONF",
+        "spark.sql.shuffle.partitions=8;spark.io.compression.codec zstd;",
+    )
+    with pytest.raises(ValueError, match="spark.io.compression.codec zstd"):
+        get_spark("conf_typo")

@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from etl_gcp_spark.sources.readers import load_table, read_jsonl
@@ -56,9 +53,9 @@ def test_grouping_sets_has_grand_total(spark, sf_dir):
     assert sum(r["n_orders"] for r in per_status) == orders.count()
 
 
-def test_read_jsonl_declared_schema_no_inference(spark, sf_dir):
+def test_read_jsonl_declared_schema_no_inference(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").limit(50)
-    path = os.path.join(tempfile.gettempdir(), "etl_gcp_spark_test_jsonl")
+    path = str(tmp_path / "jsonl")
     docs.write.mode("overwrite").json(path)
     ddl = "doc_id bigint, text string, lang string, source string, n_chars bigint"
     back = read_jsonl(spark, path, ddl)
@@ -67,7 +64,7 @@ def test_read_jsonl_declared_schema_no_inference(spark, sf_dir):
     ]
     assert back.count() == 50
     # malformed input coerces to NULL rather than raising (PERMISSIVE)
-    bad = os.path.join(tempfile.gettempdir(), "etl_gcp_spark_test_jsonl_bad")
+    bad = str(tmp_path / "jsonl_bad")
     spark.createDataFrame(
         [('{"doc_id": "not-a-number", "text": "x"}',)], "value string"
     ).write.mode("overwrite").text(bad)
